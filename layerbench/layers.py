@@ -89,6 +89,41 @@ LAYER_METRICS = {
 
 _TILE_COLS = ["var", "t", "ty", "tx", "cell", "block", "h", "w"]
 
+# the engine call whose span shows that a layer ran in a round, and the
+# layer its operators are attributed to
+SPAN_LAYERS = {
+    "pages.build_pages": "pages",
+    "pages.build_pages_scaled": "pages",
+    "pip_join.pip_join": "pip_join",
+    "zonal.zonal_statistics": "zonal",
+    "synth.synthetic_tiles": "synth",
+    "rasterize.rasterize_zones": "rasterize",
+    "zonal.tile_zonal_statistics": "raster_zonal",
+    "window_ops.tile_histogram": "histogram",
+    "render.render_tiles": "render",
+    "warp.warp_tiles": "warp",
+}
+# operators that run Python: every one in these workloads comes from a layer
+_PYTHON_OPS = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow",
+               "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas", "AggregateInPandas",
+               "WindowInPandas")
+
+
+def attribution_problems(nodes: list[dict], spans: list[dict]) -> list[str]:
+    """What the attribution missed in one round: a layer whose engine call
+    was recorded but to which no operator was attributed, and Python
+    operators attributed to no layer. Either means the engine renamed or
+    reshaped an operator that ``attribute`` recognises, and the layer's
+    metrics would read 0 as if the layer had not run."""
+    seen = {attribute(n) for n in nodes}
+    called = {SPAN_LAYERS[s["name"]] for s in spans if s["name"] in SPAN_LAYERS}
+    problems = [f"{layer} was called but no operator was attributed to it"
+                for layer in sorted(called - seen)]
+    for n in nodes:
+        if n["node"].startswith(_PYTHON_OPS) and attribute(n) is None:
+            problems.append(f"Python operator {n['node']} {n['cols']} has no layer")
+    return problems
+
 
 def _cols(node) -> set:
     return set(node["cols"] or ())

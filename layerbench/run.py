@@ -5,9 +5,10 @@
 Run from the repository root. The seed generates every input; Spark runs as
 local[N] with N = nproc and N shuffle partitions; one client (this process)
 keeps one job in flight. After set-up (session, first Python task and one
-discarded warm-up round) and discarded settle rounds for two thirds of
-``--seconds``, jobs are timed until ``--seconds`` have passed, whole rounds
-only. Every job's output, warm-up and settle included, is checked.
+discarded warm-up round) and two discarded settle rounds (none in
+query_mix), whole rounds are timed as long as they fit in ``--seconds``
+(at least one). Every job's output, warm-up and settle
+included, is checked.
 
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` alternates
 untraced and traced rounds, prints the per-layer metrics and writes the
@@ -228,7 +229,8 @@ def check_jobs(workload, record) -> None:
 
 
 def layer_record(workload, record) -> list[dict]:
-    """Per-layer metrics of every traced round."""
+    """Per-layer metrics of every traced round. A round in which a layer ran
+    but the attribution found none of its operators fails its jobs."""
     from layerbench import layers, observe
 
     rounds = []
@@ -239,6 +241,13 @@ def layer_record(workload, record) -> list[dict]:
         if calls:
             extra["checkpoint"] = observe.checkpoint_metrics(calls)
         metrics = layers.round_metrics(r["nodes"], r["spans"], r["counts"], extra)
+        problems = layers.attribution_problems(r["nodes"], r["spans"])
+        if not calls and any(s["name"] == "checkpointing.checkpointed_write" for s in r["spans"]):
+            problems.append("checkpointed_write was called but no call was observed")
+        for j in jobs:  # a layer that reads 0 although it ran fails the round
+            if problems and not j["error"]:
+                j["error"] = "layer attribution: " + "; ".join(problems)
+                print(f"job {j['job']} (round {j['round']}) failed: {j['error']}", file=sys.stderr)
         wall = sum(j["seconds"] for j in jobs)
         python_ms = sum(v for k, v in metrics.items() if k.endswith("python_total_ms"))
         task_ms = r["counts"]["task_time_ms"]
@@ -247,6 +256,7 @@ def layer_record(workload, record) -> list[dict]:
             "wall_s": wall,
             "metrics": metrics,
             "counts": r["counts"],
+            "attribution_problems": problems,
             "python_ms_per_task_ms": python_ms / task_ms if task_ms else 0.0,
             "wall_share": {k: v / wall for k, v in observe.self_times(r["spans"]).items()},
             "spans": r["spans"],
@@ -316,25 +326,36 @@ def run(args, cores, work, workload) -> int:
             info["setup_s"] = time.perf_counter() - t_setup
             builds = [s["end"] - s["start"] for s in tracer.spans
                       if s["name"] == "pip_join.build_covering_index"]
-            # settle: discarded rounds for two thirds of the measuring time;
-            # after one cold round, job times keep falling for several jobs
-            # while the JIT compiles and Python workers import the kernels
+            # settle: discarded rounds; after one cold round, job times keep
+            # falling for a few more jobs while the JIT compiles and Python
+            # workers import the kernels
             round_no, t_settle = 1, time.perf_counter()
-            while round_no == 1 or time.perf_counter() - t_settle < args.seconds * 2 / 3:
+            for _ in range(workload.settle_rounds):
                 run_round(ctx, workload, round_no, False, record, phase="settle")
                 round_no += 1
             t_loop = time.perf_counter()
+            info["settle_s"] = t_loop - t_settle
+            # timed: whole rounds that fit in the window (at least one, and
+            # one of each kind in a traced run), so the number of timed
+            # rounds follows the window, not where a late round happens to end
+            need = {False, True} if args.trace else {False}
+            round_s: list[float] = []
             while True:
-                timed = [j for j in record["jobs"] if j["phase"] == "timed"]
-                need = {False, True} if args.trace else {False}
-                if time.perf_counter() - t_loop >= args.seconds and need <= {j["traced"] for j in timed}:
+                kinds = {j["traced"] for j in record["jobs"] if j["phase"] == "timed"}
+                if round_s and need <= kinds and (
+                    time.perf_counter() - t_loop + statistics.median(round_s) > args.seconds
+                ):
                     break
+                t0 = time.perf_counter()
                 run_round(ctx, workload, round_no, bool(args.trace) and round_no % 2 == 0, record)
+                round_s.append(time.perf_counter() - t0)
                 round_no += 1
             info["measured_s"] = time.perf_counter() - t_loop
         finally:
+            t0 = time.perf_counter()
             if ctx.spark is not None:
                 stop_spark(ctx.spark)
+            info["stop_s"] = time.perf_counter() - t0
     info["peak_rss_mb"] = rss.peak / 2**20
     info["rss_samples"] = rss.samples
     t0 = time.perf_counter()
@@ -378,6 +399,7 @@ def report(args, cores, workload, record, info) -> int:
     from layerbench.layers import LAYER_METRICS
 
     jobs = record["jobs"]
+    rounds = layer_record(workload, record) if args.trace else None  # may fail jobs
     timed = [j for j in jobs if j["phase"] == "timed"]
     failed = sum(1 for j in jobs if j["error"])
     conditions = {
@@ -391,8 +413,9 @@ def report(args, cores, workload, record, info) -> int:
     e2e = summarize(workload, untraced, info)
     e2e["failed_frac"] = (failed / len(jobs), "ratio", len(jobs))
     print(f"workload {args.workload} seed {args.seed} size {args.size} trace {args.trace} "
-          f"on {conditions['master']}: {len(timed)} timed jobs in {info['measured_s']:.2f} s, "
-          f"checks {info['check_s']:.2f} s")
+          f"on {conditions['master']}: {len(timed)} timed jobs in {info['measured_s']:.2f} s "
+          f"after {info['settle_s']:.2f} s of settle rounds; stop {info['stop_s']:.2f} s, "
+          f"checks {info['check_s']:.2f} s, {time.perf_counter() - T_START:.2f} s in all")
     print(f"conditions: {json.dumps(conditions)}")
     print("jobs: " + " ".join(
         f"{j['job']}{'*' if j['traced'] else ''}={j['seconds']:.3f}" for j in timed))
@@ -404,7 +427,6 @@ def report(args, cores, workload, record, info) -> int:
 
     metrics = {k: {"value": e2e[k][0], "unit": u} for k, u in E2E_UNITS.items()}
     if args.trace:
-        rounds = layer_record(workload, record)
         traced = [j["seconds"] for j in timed if j["traced"]]
         med = {k: statistics.median(r["metrics"][k] for r in rounds) for k in rounds[0]["metrics"]}
         med["session.get_spark_s"] = info["get_spark_s"]

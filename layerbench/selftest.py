@@ -3,10 +3,12 @@ traced, at tiny sizes.
 
     python3 layerbench/selftest.py
 
-Asserts that each run is correct (failed_frac = 0), that every metric named
-for the workload is printed with its unit, that the last line carries every
-end-to-end (untraced) or per-layer (traced) metric of BENCHMARK.json, and
-that the traced run wrote its per-layer record with the tracing overhead.
+Asserts that the layer attribution fails a round whose operators it does
+not recognise, that each run is correct (failed_frac = 0), that every
+metric named for the workload is printed with its unit, that the last line
+carries every end-to-end (untraced) or per-layer (traced) metric of
+BENCHMARK.json, and that the traced run wrote its per-layer record with the
+tracing overhead.
 Takes a few minutes; runs one Spark application at a time.
 """
 
@@ -21,7 +23,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from layerbench.layers import LAYER_METRICS  # noqa: E402
+from layerbench.layers import LAYER_METRICS, attribution_problems  # noqa: E402
 from layerbench.run import E2E_UNITS  # noqa: E402
 from layerbench.workloads import WORKLOADS  # noqa: E402
 
@@ -53,11 +55,23 @@ def run(workload: str, trace: int) -> tuple[dict, dict]:
     return json.loads(lines[-1]), printed
 
 
+def check_attribution() -> None:
+    """A layer whose operators the attribution no longer recognises fails
+    the traced round instead of reading 0."""
+    span = {"name": "pip_join.pip_join"}
+    refine = {"node": "ArrowEvalPython", "cols": ["lat", "lon", "_cf"], "desc": "", "metrics": {}}
+    assert attribution_problems([refine], [span]) == []
+    renamed = dict(refine, cols=["lat", "lon", "_cf2"])
+    assert len(attribution_problems([renamed], [span])) == 2  # layer unseen, Python op unowned
+    assert attribution_problems([renamed], []) != []
+
+
 def main() -> int:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     assert {m["name"]: m["unit"] for m in bench["end_to_end"]} == E2E_UNITS
     assert {m["name"]: m["unit"] for m in bench["per_layer"]} == LAYER_METRICS
+    check_attribution()
     for name in WORKLOADS:
         for trace in (0, 1):
             result, printed = run(name, trace)

@@ -29,7 +29,7 @@ QUERY_MIX = [
 # input size per workload; "smoke" is the self-test's
 SIZES = {
     "full": {
-        "geo_zonal": {"docs": 5000, "factor": 200},
+        "geo_zonal": {"docs": 5000, "factor": 100},
         "geo_join_write": {"docs": 5000, "factor": 20},
         "tile_raster": {"width": 2048, "height": 1024, "timesteps": 2},
         "query_mix": {"docs": 500},
@@ -91,6 +91,7 @@ def pip_extra(con, pages_sql: str, polygons, calls: int = 1) -> dict:
 class Workload:
     name = ""
     eager = False  # jobs end in eager engine calls, not in an action
+    settle_rounds = 2  # discarded rounds between warm-up and timed rounds
 
     def __init__(self, size: dict):
         self.size = size
@@ -409,6 +410,9 @@ class QueryMix(Workload):
     """A seeded round-robin of declared queries; one query is one job."""
 
     name = "query_mix"
+    # its warm-up round already ran every query once, and a warm round
+    # takes 6-8 s: a settle round would push a run past its time budget
+    settle_rounds = 0
 
     def setup(self, ctx):
         import __spark_entry__
