@@ -1059,16 +1059,19 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-rule resumability, driver-checked end to end: a first job
     writes HALF the documents through checkpointed_write (per-key ledger
     rows with row counts + partition lineage), then a 'restarted' job
-    submits the FULL table — resume_filter anti-joins the done keys so
-    only the missing half recomputes, and dynamic partition overwrite
-    makes any replay idempotent. Output is the merged ledger + the
-    re-read output table: n_keys/ledger_rows/output_rows must equal the
-    DuckDB recomputation from documents alone — duplicated or dropped
-    work breaks the hash."""
+    submits the FULL table — the call reads the ledger once and drops the
+    done keys before recomputing, so only the missing half recomputes,
+    and the write's own dynamic partition overwrite option makes any
+    replay idempotent. Output is the merged ledger, read back
+    with the explicit ledger schema, + the re-read output table:
+    n_keys/ledger_rows/output_rows must equal the DuckDB recomputation
+    from documents alone — duplicated or dropped work breaks the hash.
+    The one-row result is built from an Arrow table (no Python worker)."""
     import shutil
     import tempfile
 
-    from trefoil_spark.plans.checkpointing import checkpointed_write
+    from trefoil_spark.plans.checkpointing import CHECKPOINT_SCHEMA, checkpointed_write
+    from trefoil_spark.session import local_frame
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1080,7 +1083,8 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpointed_write(docs.filter(F.col("bucket") < 8), out, cp, "s1", ["bucket"])
         r2 = checkpointed_write(docs, out, cp, "s1", ["bucket"])  # restart
         row = (
-            spark.read.parquet(cp)
+            spark.read.schema(CHECKPOINT_SCHEMA)
+            .parquet(cp)
             .groupBy("stage")
             .agg(
                 F.countDistinct("key").cast("bigint").alias("n_keys"),
@@ -1089,8 +1093,9 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()[0]  # one stage — materialize before the tmpdir goes
         )
-        output_rows = spark.read.parquet(out).count()
-        return spark.createDataFrame(
+        output_rows = spark.read.schema(docs.schema).parquet(out).count()
+        return local_frame(
+            spark,
             [
                 (
                     row["stage"],

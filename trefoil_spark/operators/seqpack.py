@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from trefoil_spark.session import local_frame
+
 __all__ = ["pack_sequences", "cap_per_domain", "domain_col",
            "sample_to_token_budget", "token_budget_sql_duckdb"]
 
@@ -57,7 +59,8 @@ def _prefix_offsets(spark, brows, keyed: bool):
     #buckets rows; bucket_size is tuned so #buckets ~ cores x a few at
     any corpus size), so the python loop is O(#buckets) — and skipping
     the single-partition prefix-window stage drops two exchanges from
-    the plan."""
+    the plan. The offsets go back to Spark as one Arrow table
+    (``local_frame``), so scanning them boots no Python worker."""
     if keyed:
         brows = sorted(brows, key=lambda r: (r["__key"], r["bucket"]))
         out, acc, cur = [], 0, None
@@ -66,15 +69,15 @@ def _prefix_offsets(spark, brows, keyed: bool):
                 cur, acc = r["__key"], 0
             out.append((cur, r["bucket"], acc))
             acc += r["bsum"]
-        return spark.createDataFrame(
-            out, "__key string, bucket bigint, boffset bigint"
+        return local_frame(
+            spark, out, "__key string, bucket bigint, boffset bigint"
         )
     brows = sorted(brows, key=lambda r: r["bucket"])
     out, acc = [], 0
     for r in brows:
         out.append((r["bucket"], acc))
         acc += r["bsum"]
-    return spark.createDataFrame(out, "bucket bigint, boffset bigint")
+    return local_frame(spark, out, "bucket bigint, boffset bigint")
 
 
 def pack_sequences(docs: DataFrame, seq_len: int,

@@ -4,14 +4,21 @@ checkpoint table so a killed job resumes at tile granularity").
 
 Design (simplest correct, SURVEY.md §7.2):
 - outputs are IDEMPOTENT and KEYED (tile keys / cell / doc_id ranges);
-- a job runs in key-granular units: ``resume_filter`` anti-joins the done
-  keys from the checkpoint table before recomputation (left_anti — the
-  restart reads only checkpoint keys, never the old output data);
-- ``checkpointed_write`` appends the data AND, transactionally after the
-  data commit succeeds, appends one checkpoint row per key with row
-  counts + partition lineage. A kill between the two writes re-runs those
-  keys; dynamic partition overwrite makes the re-run overwrite, not
-  duplicate.
+- a job runs in key-granular units. ``done_keys`` reads the ledger once
+  per call, with the explicit ``CHECKPOINT_SCHEMA`` (no inference job),
+  and collects the stage's committed keys to the driver: the ledger holds
+  one row per work unit, the same bound the metrics collect relies on. A
+  missing ledger means nothing is done; any other read error propagates,
+  so an unreadable ledger never turns into "redo everything";
+- ``resume_filter`` drops the done keys (the restart reads only
+  checkpoint keys, never the old output data): with an InSet predicate
+  for a few keys, with a broadcast left_anti against an Arrow-built keys
+  frame for many, and not at all when none are done;
+- ``checkpointed_write`` commits the data first and, only after that
+  commit succeeds, appends one ledger row per key with its row count and
+  partition lineage, as one parquet file. A kill between the two writes
+  re-runs those keys; the per-write dynamic partition overwrite makes the
+  re-run overwrite, not duplicate. No session conf is changed.
 
 No custom commit protocol: Spark's file committer gives atomic task
 commits; the checkpoint table is the unit-of-work ledger above it.
@@ -24,6 +31,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trefoil_spark.session import local_frame
+
 CHECKPOINT_SCHEMA = (
     "stage string, key string, row_count bigint, n_partitions int, committed_at double"
 )
@@ -33,22 +42,52 @@ def _key_col(key_cols: list[str]):
     return F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols])
 
 
-def done_keys(spark: SparkSession, checkpoint_dir: str, stage: str) -> DataFrame:
-    try:
-        cp = spark.read.parquet(checkpoint_dir)
-    except Exception:
-        return spark.createDataFrame([], "key string")
-    return cp.filter(F.col("stage") == stage).select("key").distinct()
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.exists(jpath)
 
 
-def resume_filter(
-    df: DataFrame, checkpoint_dir: str, stage: str, key_cols: list[str]
-) -> DataFrame:
-    """Drop work units already committed for this stage (left_anti)."""
-    done = done_keys(df.sparkSession, checkpoint_dir, stage)
+def done_keys(spark: SparkSession, checkpoint_dir: str, stage: str) -> list[str]:
+    """Sorted keys of ``stage`` committed in the ledger (one Spark job, none
+    when the ledger does not exist yet)."""
+    if not _path_exists(spark, checkpoint_dir):
+        return []
+    rows = (
+        spark.read.schema(CHECKPOINT_SCHEMA)
+        .parquet(checkpoint_dir)
+        .filter(F.col("stage") == stage)
+        .select("key")
+        .collect()
+    )
+    return sorted({r["key"] for r in rows})
+
+
+# Up to this many done keys the resume filter is an InSet predicate. It adds
+# no exchange to the persisted plan, so the cache fills inside the write
+# task. A broadcast left_anti costs two more Spark jobs per call (collecting
+# the keys frame, and filling the cache as its own AQE stage), about 0.25 s
+# on 4 local cores; planning ``isin`` over py4j costs about 1 ms per key, so
+# the join is cheaper above a few hundred keys.
+_INSET_MAX_KEYS = 256
+
+
+def resume_filter(df: DataFrame, keys: list[str], key_cols: list[str]) -> DataFrame:
+    """Drop the work units whose key is in ``keys``."""
+    if not keys:
+        return df
+    if len(keys) <= _INSET_MAX_KEYS:
+        return df.filter(~_key_col(key_cols).isin(keys))
+    done = local_frame(df.sparkSession, [(k,) for k in keys], "key string")
     keyed = df.withColumn("_cp_key", _key_col(key_cols))
     return keyed.join(F.broadcast(done), keyed["_cp_key"] == done["key"], "left_anti").drop(
         "_cp_key"
+    )
+
+
+def _append_ledger(spark: SparkSession, checkpoint_dir: str, rows: list[tuple]) -> None:
+    local_frame(spark, rows, CHECKPOINT_SCHEMA).coalesce(1).write.mode("append").parquet(
+        checkpoint_dir
     )
 
 
@@ -61,45 +100,44 @@ def checkpointed_write(
 ) -> dict:
     """Write remaining work units + append their checkpoint ledger rows.
 
-    Returns {written_rows, written_keys, skipped_keys}. The data write is
-    partitioned by the key columns with dynamic partition overwrite, so a
-    replay of a half-committed unit overwrites instead of duplicating.
+    Returns {written_rows, written_keys, skipped_keys}; ``skipped_keys``
+    counts the stage's keys the ledger had committed before this call.
+    The data write is partitioned by the key columns with dynamic
+    partition overwrite, so a replay of a half-committed unit overwrites
+    instead of duplicating.
     """
     spark = df.sparkSession
+    done = done_keys(spark, checkpoint_dir, stage)
     # persist: the write and the ledger metrics are two actions — with a
     # nondeterministic source, recomputing `todo` for the metrics could
     # commit ledger counts that diverge from the parquet actually written
-    todo = resume_filter(df, checkpoint_dir, stage, key_cols).persist()
-
-    skipped = done_keys(spark, checkpoint_dir, stage).count()
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    todo.write.partitionBy(*key_cols).mode("overwrite").parquet(out_path)
-
-    # lineage: per-key row counts + how many task partitions contributed
-    metrics = (
-        todo.withColumn("_pid", F.spark_partition_id())
-        .groupBy(*key_cols)
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.countDistinct("_pid").alias("n_partitions"),
+    todo = resume_filter(df, done, key_cols).persist()
+    try:
+        (
+            todo.write.partitionBy(*key_cols)
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(out_path)
         )
-        .select(
-            F.lit(stage).alias("stage"),
-            _key_col(key_cols).alias("key"),
-            "row_count",
-            "n_partitions",
-            F.lit(time.time()).alias("committed_at"),
+        # lineage: per-key row counts + how many task partitions contributed
+        metrics = (
+            todo.withColumn("_pid", F.spark_partition_id())
+            .groupBy(*key_cols)
+            .agg(
+                F.count(F.lit(1)).alias("row_count"),
+                F.size(F.collect_set("_pid")).alias("n_partitions"),
+            )
+            .select(_key_col(key_cols).alias("key"), "row_count", "n_partitions")
+            .collect()  # small: one row per work unit
         )
-    )
-    rows = metrics.collect()  # small: one row per work unit
-    todo.unpersist()
+    finally:
+        todo.unpersist()
+    committed_at = time.time()
+    rows = [(stage, r["key"], r["row_count"], r["n_partitions"], committed_at) for r in metrics]
     if rows:
-        spark.createDataFrame(rows, CHECKPOINT_SCHEMA).write.mode("append").parquet(
-            checkpoint_dir
-        )
+        _append_ledger(spark, checkpoint_dir, rows)
     return {
-        "written_rows": sum(r["row_count"] for r in rows),
+        "written_rows": sum(r["row_count"] for r in metrics),
         "written_keys": len(rows),
-        "skipped_keys": skipped,
+        "skipped_keys": len(done),
     }

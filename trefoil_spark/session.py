@@ -70,3 +70,25 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str):
+    """DataFrame of driver-side ``rows`` (tuples) with the DDL ``schema``,
+    uploaded as one Arrow table and built JVM-side.
+
+    ``spark.createDataFrame(list)`` goes through a Python-worker RDD: its
+    first action boots Python tasks just to deserialize a handful of
+    rows. An Arrow table is shipped to the JVM directly.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
