@@ -5,6 +5,7 @@ import glob
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from trefoil_spark.plans import checkpointing
@@ -42,7 +43,8 @@ def test_corrupt_ledger_raises(spark, docs, tmp_path):
     os.makedirs(cp)
     with open(os.path.join(cp, "part-00000-corrupt.snappy.parquet"), "wb") as f:
         f.write(b"not a parquet file" * 64)
-    with pytest.raises(Exception):
+    # the ledger read itself fails: Spark names the corrupt ledger file
+    with pytest.raises(Py4JJavaError, match=r"FAILED_READ_FILE\S* .*ledger/part-00000-corrupt"):
         checkpointed_write(docs, out, cp, "s1", ["bucket"])
     assert not os.path.exists(out)  # no key was redone
 
@@ -63,9 +65,7 @@ def test_no_session_conf_mutation(spark, sf_dir, tmp_path):
     assert session.read.parquet(out).count() == docs.count()
 
 
-@pytest.mark.parametrize("inset_max_keys", [256, 0], ids=["inset", "broadcast"])
-def test_ledger_append_fault_then_restart(spark, docs, tmp_path, monkeypatch, inset_max_keys):
-    monkeypatch.setattr(checkpointing, "_INSET_MAX_KEYS", inset_max_keys)
+def test_ledger_append_fault_then_restart(spark, docs, tmp_path, monkeypatch):
     out, cp = str(tmp_path / "out"), str(tmp_path / "ledger")
     want = {
         str(r["bucket"]): r["n"]
@@ -96,6 +96,14 @@ def test_ledger_append_fault_then_restart(spark, docs, tmp_path, monkeypatch, in
     ledger = _ledger(spark, cp)
     assert sorted(row["key"] for row in ledger) == ["0", "1", "2", "3"]
     assert {row["key"]: row["row_count"] for row in ledger} == want
+
+
+def test_resume_filter_any_key_text(spark):
+    keys = ["plain", "it's", "back\\slash", "a|b", "é", "", "new\nline"]
+    df = local_frame(spark, [(k,) for k in keys + ["left", "it"]], "k string")
+    kept = checkpointing.resume_filter(df, keys, ["k"])
+    assert kept.columns == ["k"]
+    assert sorted(r["k"] for r in kept.collect()) == ["it", "left"]
 
 
 def test_restart_job_budget(spark, docs, tmp_path):

@@ -10,10 +10,9 @@ Design (simplest correct, SURVEY.md §7.2):
   one row per work unit, the same bound the metrics collect relies on. A
   missing ledger means nothing is done; any other read error propagates,
   so an unreadable ledger never turns into "redo everything";
-- ``resume_filter`` drops the done keys (the restart reads only
-  checkpoint keys, never the old output data): with an InSet predicate
-  for a few keys, with a broadcast left_anti against an Arrow-built keys
-  frame for many, and not at all when none are done;
+- ``resume_filter`` drops the done keys with one InSet predicate (the
+  restart reads only checkpoint keys, never the old output data), and
+  filters nothing when no key is done;
 - ``checkpointed_write`` commits the data first and, only after that
   commit succeeds, appends one ledger row per key with its row count and
   partition lineage, as one parquet file. A kill between the two writes
@@ -63,26 +62,20 @@ def done_keys(spark: SparkSession, checkpoint_dir: str, stage: str) -> list[str]
     return sorted({r["key"] for r in rows})
 
 
-# Up to this many done keys the resume filter is an InSet predicate. It adds
-# no exchange to the persisted plan, so the cache fills inside the write
-# task. A broadcast left_anti costs two more Spark jobs per call (collecting
-# the keys frame, and filling the cache as its own AQE stage), about 0.25 s
-# on 4 local cores; planning ``isin`` over py4j costs about 1 ms per key, so
-# the join is cheaper above a few hundred keys.
-_INSET_MAX_KEYS = 256
-
-
 def resume_filter(df: DataFrame, keys: list[str], key_cols: list[str]) -> DataFrame:
-    """Drop the work units whose key is in ``keys``."""
+    """Drop the work units whose key is in ``keys``.
+
+    One ``NOT IN`` predicate, which the optimizer turns into a hash InSet.
+    It adds no exchange to the persisted plan, so no extra Spark job runs.
+    The literal list is parsed from one SQL string: ``Column.isin`` makes
+    two py4j calls per key. Keys are compared hex-encoded, so any key text
+    is a valid literal under any parser setting.
+    """
     if not keys:
         return df
-    if len(keys) <= _INSET_MAX_KEYS:
-        return df.filter(~_key_col(key_cols).isin(keys))
-    done = local_frame(df.sparkSession, [(k,) for k in keys], "key string")
-    keyed = df.withColumn("_cp_key", _key_col(key_cols))
-    return keyed.join(F.broadcast(done), keyed["_cp_key"] == done["key"], "left_anti").drop(
-        "_cp_key"
-    )
+    listing = ", ".join(f"'{k.encode().hex().upper()}'" for k in keys)
+    keyed = df.withColumn("_cp_key", F.hex(_key_col(key_cols)))
+    return keyed.filter(F.expr(f"_cp_key NOT IN ({listing})")).drop("_cp_key")
 
 
 def _append_ledger(spark: SparkSession, checkpoint_dir: str, rows: list[tuple]) -> None:
