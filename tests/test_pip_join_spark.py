@@ -57,7 +57,7 @@ def test_cell_col_matches_sql_and_numpy(pages, duck):
 
 
 def test_pip_join_matches_oracle(pages, duck):
-    joined = pip_join(pages, ZONE_LAYER, key_cols=["doc_id"])
+    joined = pip_join(pages, ZONE_LAYER)
     got = (
         joined.select("doc_id", "zone_value").orderBy("doc_id").toPandas()
     )
@@ -80,29 +80,10 @@ def test_pip_join_matches_oracle(pages, duck):
     assert (got["zone_value"] == "urban").sum() > 0
 
 
-def test_refine_modes_agree(pages):
-    """expr (pure-JVM CASE chain), udf (Arrow numpy), and split-udf refine
-    strategies must produce identical assignments."""
-    base = (
-        pip_join(pages, ZONE_LAYER, refine="expr")
-        .select("doc_id", "feature_id")
-        .orderBy("doc_id")
-        .collect()
-    )
-    for kwargs in ({"refine": "udf"}, {"refine": "udf", "split_python": True}):
-        got = (
-            pip_join(pages, ZONE_LAYER, **kwargs)
-            .select("doc_id", "feature_id")
-            .orderBy("doc_id")
-            .collect()
-        )
-        assert got == base, kwargs
-
-
 def test_text_byte_identity_through_shuffles(pages, spark, sf_dir):
     """input_hint invariant: byte-identical text per url through every
     shuffle stage (join + repartition + groupBy path)."""
-    joined = pip_join(pages, ZONE_LAYER, key_cols=["doc_id"])
+    joined = pip_join(pages, ZONE_LAYER)
     shuffled = joined.repartition(8, "zone_value")
     after = {
         r["url"]: r["text"]
@@ -115,7 +96,7 @@ def test_text_byte_identity_through_shuffles(pages, spark, sf_dir):
 
 
 def test_zonal_statistics_matches_oracle(pages, duck):
-    joined = pip_join(pages, ZONE_LAYER, key_cols=["doc_id"]).withColumn(
+    joined = pip_join(pages, ZONE_LAYER).withColumn(
         "n_chars", F.length("text")
     )
     got = (
@@ -146,6 +127,31 @@ def test_zonal_statistics_matches_oracle(pages, duck):
         """
     ).df()
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_memoized_plans_belong_to_their_session(spark, sf_dir, tmp_path):
+    """The pages plan and the covering frames are memoized per session
+    object: a second session gets its own, built under its own conf, and
+    alternating inputs never evict each other."""
+    import os
+
+    b = spark.newSession()
+    pages_b = build_pages(b, sf_dir)
+    assert pages_b.sparkSession is b
+    assert build_pages(spark, sf_dir).sparkSession is spark
+
+    other = tmp_path / "sf_copy"
+    other.mkdir()
+    os.symlink(os.path.join(sf_dir, "documents.parquet"), other / "documents.parquet")
+    first = [build_pages(b, d) for d in (sf_dir, str(other))]
+    again = [build_pages(b, d) for d in (sf_dir, str(other))]
+    assert first[0] is pages_b and first[0] is not first[1]
+    assert all(x is y for x, y in zip(first, again))
+
+    assert (
+        pip_join(pages_b, ZONE_LAYER).count()
+        == pip_join(build_pages(spark, sf_dir), ZONE_LAYER).count()
+    )
 
 
 def test_fast_cell_builders_match_per_bit_in_spark(spark):

@@ -20,6 +20,18 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().toString()
 
 
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _nodes(node) -> list:
+    """A JVM SparkPlan and all its descendants, pre-order."""
+    out = [node]
+    for child in _seq(node.children()):
+        out.extend(_nodes(child))
+    return out
+
+
 @pytest.fixture(scope="module")
 def pages_parquet(spark, sf_dir, tmp_path_factory):
     from trefoil_spark.sources.pages import build_pages
@@ -34,12 +46,21 @@ def test_pip_join_plan_zero_shuffles(spark, pages_parquet):
     from trefoil_spark.sources.zones import ZONE_LAYER
 
     pages = spark.read.parquet(pages_parquet)
-    plan = _plan(pip_join(pages, ZONE_LAYER))
+    joined = pip_join(pages, ZONE_LAYER)
+    plan = _plan(joined)
     assert "BroadcastHashJoin" in plan
     # the only exchanges are broadcasts — no shuffle of the point table
     for line in plan.splitlines():
         if "Exchange" in line and "BroadcastExchange" not in line:
             raise AssertionError(f"unexpected shuffle in PIP join plan: {line}")
+    # the refine is ONE Arrow pass fed the fine cell: per-operator layer
+    # attribution identifies the join's Python node by `_cf` in its input
+    refines = [
+        n for n in _nodes(joined._jdf.queryExecution().sparkPlan())
+        if n.nodeName() == "ArrowEvalPython"
+    ]
+    assert len(refines) == 1, plan
+    assert "_cf" in [a.name() for a in _seq(refines[0].child().output())]
 
 
 def test_zonal_pipeline_single_shuffle(spark, pages_parquet):

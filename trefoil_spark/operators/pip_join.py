@@ -18,14 +18,14 @@ Physical strategy (scale-first):
    coarse cell from it by bit-shift — whole-stage codegen, no shuffle).
 3. **Interior fast path**: rows in resolved cells (either level) get
    their feature_id from the broadcast row — pure JVM.
-4. **Exact refine** for fine-boundary rows only (a few % of input):
+4. **Exact refine** for fine-boundary rows only (a few % of input): one
    Arrow-batched pandas UDF running the chunked vectorized even-odd
    crossing test, burn order resolved in-UDF (highest feature_id wins =
-   GDAL rasterize overwrite order). With ``split_python=True`` those rows
-   are a separate union branch, so interior rows never even transit Arrow.
+   GDAL rasterize overwrite order). Every row rides the single Arrow
+   pass; resolved rows send a NULL cell, so Python does no math for them.
 
-Plan at 100 TB: Scan → codegen cell exprs → BHJ ×2 → [interior branch
-pure JVM] ∪ [boundary branch ArrowEvalPython]. Zero shuffles.
+Plan at 100 TB: Scan → codegen cell exprs → BHJ ×2 → ArrowEvalPython
+(refine) → JVM resolution ladder. Zero shuffles.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from pyspark.sql.types import LongType
 
 from ..geometry import Polygon, points_in_rings
 from ..grid import cells
+from ..session import local_frame, session_memo
 
 DEFAULT_RES = 9
 DEFAULT_FINE_RES = 14
@@ -146,8 +147,12 @@ def build_covering_index(
       coarse: [(cell, fids_desc, resolved|None)]   (None = boundary)
       fine:   [(cell, resolved|None)]              (children of boundary
                coarse cells at fine_res; None = still boundary)
-      fine_fids: {fine_cell: fids_desc} for boundary fine cells (UDF map)
+      fid_groups: (cell_keys, cell_gids, group_fids) — the boundary fine
+               cells (sorted) and their candidate-list group, the winner
+               UDF's lookup tables
       rings_by_fid: {fid: rings}
+      res, fine_res
+    The dict is shared by every caller and is never mutated after build.
     """
     if not res < fine_res <= 24:
         raise ValueError(
@@ -221,7 +226,7 @@ def build_covering_index(
     out = {
         "coarse": coarse,
         "fine": fine,
-        "fine_fids": fine_fids,
+        "fid_groups": _fid_groups(fine_fids),
         "rings_by_fid": rings_by_fid,
         "res": res,
         "fine_res": fine_res,
@@ -230,89 +235,75 @@ def build_covering_index(
     return out
 
 
-def _covering_dfs(spark: SparkSession, index: dict):
-    """(cov1, cov2) DataFrames for a covering index, memoized per session.
+def _fid_groups(cell_fids: dict[int, list[int]]):
+    """Group boundary fine cells by their candidate fid list.
 
-    r8: the fine index is ~10^5 rows; uploading it (pandas→Arrow→JVM
-    createDataFrame) cost ~0.4 s of driver time and materializing it for
-    the broadcast build another ~0.2 s on EVERY pip query. The index is
-    a pure function of the polygon layer (same memoization contract as
-    ``_COVERING_CACHE`` — no input data involved), so the session-lived
-    DataFrames are built once and persisted (~1.5 MB) and each query's
-    broadcast build reads the cached blocks.
-
-    Arrow path (pandas), not pickled tuples, for the upload. r2 uses an
-    INTEGER SENTINEL (-2 = boundary) instead of NULL: nullable columns
-    round-tripped through pandas turn into DOUBLE NaN when the session
-    has arrow.pyspark.enabled=false (NaN is not NULL → silently corrupts
-    the resolution ladder and then explodes under ANSI casts). Pure
-    int64 is representation-proof.
-    """
-    key = spark.sparkContext.applicationId
-    dfs = index.setdefault("_session_dfs", {})
-    cached = dfs.get(key)
-    if cached is not None:
-        return cached
-    # coalesce(1): the per-query broadcast build re-reads these from the
-    # block cache — one task instead of defaultParallelism near-empty
-    # tasks per build (they are ≤ ~10^5 rows by construction)
-    cov1 = spark.createDataFrame(
-        index["coarse"], "c1 bigint, fids array<bigint>, r1 bigint"
-    ).coalesce(1).persist()
-    fine_rows = [
-        (c, BOUNDARY if r is None else r) for c, r in (index["fine"] or [(-1, -1)])
-    ]
-    fine_pdf = pd.DataFrame(fine_rows, columns=["c2", "r2"]).astype("int64")
-    cov2 = spark.createDataFrame(fine_pdf).coalesce(1).persist()
-    dfs.clear()  # a dead session's persist handles are useless — drop them
-    dfs[key] = (cov1, cov2)
-    return cov1, cov2
-
-
-def covering_index_df(
-    spark: SparkSession, polygons: list[Polygon], res: int = DEFAULT_RES
-) -> DataFrame:
-    """Coarse covering as a DataFrame (kept for tests/inspection)."""
-    idx = build_covering_index(polygons, res)
-    return spark.createDataFrame(
-        idx["coarse"], "cell bigint, fids array<bigint>, resolved_fid bigint"
-    )
-
-
-def _make_winner_udf(index: dict):
-    """Vectorized pandas UDF: (lon, lat, fine_cell) -> feature_id|null.
-
-    r8: rows are grouped per distinct CANDIDATE FID LIST, not per
+    r8: the refine batches rows per distinct CANDIDATE FID LIST, not per
     distinct fine cell. A point's exact tests depend only on its cell's
     (burn-ordered) candidate list, and the number of distinct lists is
     bounded by polygon-overlap combinations (a handful) while distinct
     boundary cells number in the hundreds per batch — the per-cell loop
     paid points_in_rings' fixed numpy setup ~800x per batch for ~500
     boundary rows (measured 35-130 ms/batch; now ~#groups x #fids
-    calls). The cell -> group mapping is two sorted int64 arrays built
-    once per index (vectorized searchsorted lookup, no per-row Python);
-    per-point test order (descending fid burn order within the point's
-    list) is unchanged, so results are identical.
+    calls). Returns (sorted cell keys, their group ids, group fid lists)
+    for a vectorized searchsorted lookup with no per-row Python.
+    """
+    gid_by_list: dict[tuple, int] = {}
+    group_fids: list[tuple] = []
+    keys = np.empty(len(cell_fids), dtype=np.int64)
+    gids = np.empty(len(cell_fids), dtype=np.int64)
+    for i, (c, fids) in enumerate(cell_fids.items()):
+        t = tuple(fids)
+        g = gid_by_list.get(t)
+        if g is None:
+            g = gid_by_list[t] = len(group_fids)
+            group_fids.append(t)
+        keys[i] = c
+        gids[i] = g
+    order = np.argsort(keys)
+    return keys[order], gids[order], group_fids
+
+
+def _covering_dfs(spark: SparkSession, index: dict):
+    """(cov1, cov2) DataFrames for a covering index, memoized per session.
+
+    r8: the fine index is ~10^5 rows; uploading it cost ~0.4 s of driver
+    time and materializing it for the broadcast build another ~0.2 s on
+    EVERY pip query. The index is a pure function of the polygon layer,
+    so each session builds the DataFrames once and persists them
+    (~1.5 MB); each query's broadcast build reads the cached blocks.
+    ``_COVERING_CACHE`` never evicts, so the index's id names it for the
+    life of the process.
+
+    Both frames are Arrow uploads (``local_frame``: no Python workers).
+    The fine resolution uses an INTEGER SENTINEL (BOUNDARY) instead of
+    NULL: pure int64 is representation-proof under any session conf
+    (arrow.pyspark.enabled=false, ANSI casts).
+    """
+
+    def build():
+        # coalesce(1): the per-query broadcast build re-reads these from the
+        # block cache — one task instead of defaultParallelism near-empty
+        # tasks per build (they are ≤ ~10^5 rows by construction)
+        cov1 = local_frame(
+            spark, index["coarse"], "c1 bigint, fids array<bigint>, r1 bigint"
+        ).coalesce(1).persist()
+        fine_rows = [(c, BOUNDARY if r is None else r) for c, r in index["fine"]]
+        cov2 = local_frame(spark, fine_rows, "c2 bigint, r2 bigint").coalesce(1).persist()
+        return cov1, cov2
+
+    return session_memo(spark, ("pip_join.covering", id(index)), build)
+
+
+def _make_winner_udf(index: dict):
+    """Vectorized pandas UDF: (lon, lat, fine_cell) -> feature_id, -1 = none.
+
+    Rows are looked up in the index's ``fid_groups`` and tested one
+    candidate-list group at a time; per-point test order is descending
+    fid (burn order) within the point's list.
     """
     rings_by_fid = index["rings_by_fid"]
-    groups = index.get("_fid_groups")
-    if groups is None:
-        cell_fids = index["fine_fids"]
-        gid_by_list: dict[tuple, int] = {}
-        group_fids: list[tuple] = []
-        keys = np.empty(len(cell_fids), dtype=np.int64)
-        gids = np.empty(len(cell_fids), dtype=np.int64)
-        for i, (c, fids) in enumerate(cell_fids.items()):
-            t = tuple(fids)
-            g = gid_by_list.get(t)
-            if g is None:
-                g = gid_by_list[t] = len(group_fids)
-                group_fids.append(t)
-            keys[i] = c
-            gids[i] = g
-        order = np.argsort(keys)
-        groups = index["_fid_groups"] = (keys[order], gids[order], group_fids)
-    cell_keys, cell_gids, group_fids = groups
+    cell_keys, cell_gids, group_fids = index["fid_groups"]
 
     @F.pandas_udf(LongType())
     def winner(lon: pd.Series, lat: pd.Series, cell: pd.Series) -> pd.Series:
@@ -346,62 +337,24 @@ def _make_winner_udf(index: dict):
     return winner.asNondeterministic()
 
 
-EXPR_REFINE_MAX_EDGES = 64
-
-
-def _expr_refine_feature(polygons: list[Polygon], lon_col: str, lat_col: str) -> Column:
-    """Boundary refine as a pure Catalyst CASE chain (burn order: highest
-    fid first). CASE short-circuits in codegen, so only boundary rows pay
-    the crossing tests — zero Python, zero Arrow traffic."""
-    from ..geometry import pip_sql_expr
-
-    expr = None
-    for fid in range(len(polygons) - 1, -1, -1):
-        cond = F.expr(pip_sql_expr(lon_col, lat_col, polygons[fid]))
-        expr = F.when(cond, F.lit(fid)) if expr is None else expr.when(cond, F.lit(fid))
-    return expr.otherwise(F.lit(None).cast("bigint"))
-
-
 def pip_join(
     points: DataFrame,
     polygons: list[Polygon],
-    key_cols: list[str] | None = None,  # kept for API compat; unused
     lon_col: str = "lon",
     lat_col: str = "lat",
-    res: int = DEFAULT_RES,
-    fine_res: int = DEFAULT_FINE_RES,
-    how: str = "inner",
-    split_python: bool = False,
-    refine: str = "auto",
 ) -> DataFrame:
     """Join points to the polygon layer; adds ``feature_id`` + ``zone_value``.
 
     Zero-shuffle; interior cells resolve JVM-side at two index levels;
     only fine-boundary rows (measured 0.83% on the flagship layer) need
-    the exact test. ``refine`` picks its engine:
-    - 'expr' — Catalyst CASE chain of crossing tests (pure JVM; best for
-      small layers, total edges ≤ ~{EXPR_REFINE_MAX_EDGES});
-    - 'udf'  — Arrow-batched numpy (per-cell candidate pruning; scales to
-      arbitrarily complex layers);
-    - 'auto' — currently 'udf' (see the measured trade below).
-
-    ``split_python=True`` physically splits interior from boundary rows
-    so interior rows never touch the refine engine at all:
-    - with 'udf': interior rows skip the Arrow pipe entirely — the
-      fastest mode at every core count on pre-projected (narrow) inputs
-      and the best-scaling (BENCH/BASELINE.md round-2 table);
-    - with 'expr': the CASE chain runs in its own post-exchange stage
-      over boundary rows only (zero Python workers in the whole job) —
-      without the exchange the chain's codegen fallback would drop the
-      entire scan stage to interpreted execution.
-    Default False keeps the single-pass plan (one scan; right for wide
-    inputs where a second scan costs more than the Arrow pipe).
-
-    Points matching no polygon are dropped under ``how='inner'``
-    (reference zone-raster fill semantics) or kept with nulls under 'left'.
+    the exact test, run by one Arrow-batched numpy UDF with per-cell
+    candidate pruning (scales to arbitrarily complex layers). Points
+    matching no polygon are dropped (reference zone-raster fill
+    semantics).
     """
     spark = points.sparkSession
-    index = build_covering_index(polygons, res, fine_res)
+    index = build_covering_index(polygons)
+    res, fine_res = index["res"], index["fine_res"]
     cov1, cov2 = _covering_dfs(spark, index)
 
     # compute the integer coords ONCE as columns; the spread-bits morton
@@ -433,93 +386,25 @@ def pip_join(
         & (F.col("r2").isNull() | (F.col("r2") == BOUNDARY))
     )
 
-    if refine == "auto":
-        # 'udf' wins on measured throughput (4.1M rows/s @16 cores vs
-        # 1.3M for 'expr' on the 40M-row flagship): the big CASE chain
-        # exceeds whole-stage-codegen size limits and falls back to
-        # interpreted evaluation, and Catalyst re-evaluates it under
-        # filter pushdown. 'expr' scales more linearly ((4,16) efficiency
-        # 0.84 vs 0.72) because it has no Python-worker contention —
-        # useful on clusters where Python workers are the constraint.
-        refine = "udf"
-
-    if refine == "expr":
-        if split_python:
-            # split_expr: interior rows take the pure-column JVM ladder;
-            # ONLY the ~1% boundary rows evaluate the big CASE chain.
-            # This keeps the whole job JVM-side (zero Python workers —
-            # nothing rides Arrow) without paying the chain's
-            # interpreted-evaluation cost on every row: measured at the
-            # hardware scaling ceiling on the 320M-row flagship
-            # (BENCH/BASELINE.md), the cluster-shaped plan of choice.
-            interior = joined.filter(~is_py).withColumn("feature_id", jvm_feature)
-            # the repartition is load-bearing: the big CASE chain exceeds
-            # codegen limits, which would otherwise drop the ENTIRE
-            # scan+join+filter stage to interpreted execution for every
-            # row. The exchange isolates the interpreted projection in
-            # its own post-shuffle stage that only ever sees the ~1%
-            # boundary rows (measured: 16.1s → ~2s on the 20M-row
-            # flagship).
-            boundary = (
-                joined.filter(is_py)
-                .repartition(max(joined.sparkSession.sparkContext.defaultParallelism, 1))
-                .withColumn(
-                    "feature_id", _expr_refine_feature(polygons, lon_col, lat_col)
-                )
-            )
-            joined = interior.unionByName(boundary)
-        else:
-            joined = joined.withColumn(
-                "feature_id",
-                F.when(~is_py, jvm_feature).otherwise(
-                    _expr_refine_feature(polygons, lon_col, lat_col)
-                ),
-            )
-        joined = joined.drop("fids", "r1", "r2", "_cf", "_cc")
-        value_map = F.create_map(
-            *[x for fid, poly in enumerate(polygons) for x in (F.lit(fid), F.lit(str(poly.value)))]
-        )
-        joined = joined.withColumn("zone_value", value_map[F.col("feature_id")])
-        if how == "inner":
-            joined = joined.filter(F.col("feature_id").isNotNull())
-        return joined
-
+    # single pass: resolved rows pass a NULL cell into the UDF so the
+    # Python side does zero math for them. The raw UDF output uses -1 for
+    # "no match"; the NULL translation is a separate JVM step (the UDF is
+    # nondeterministic-marked, so Catalyst cannot collapse/duplicate it
+    # into downstream expressions)
     winner = _make_winner_udf(index)
-    # the raw UDF output uses -1 for "no match"; the NULL translation is a
-    # separate JVM step (the UDF is nondeterministic-marked, so Catalyst
-    # cannot collapse/duplicate it into downstream expressions)
-    if split_python:
-        interior = joined.filter(~is_py).withColumn("feature_id", jvm_feature)
-        boundary = (
-            joined.filter(is_py)
-            .withColumn(
-                "_fid_raw", winner(F.col(lon_col), F.col(lat_col), F.col("_cf"))
-            )
-            .withColumn(
-                "feature_id", F.when(F.col("_fid_raw") >= 0, F.col("_fid_raw"))
-            )
-            .drop("_fid_raw")
-        )
-        joined = interior.unionByName(boundary)
-    else:
-        # single-pass: non-boundary rows pass NULL cell into the UDF so the
-        # Python side does zero math for them (they still ride the Arrow
-        # pipe — use split_python=True to avoid even that)
-        joined = joined.withColumn(
-            "_fid_raw",
-            winner(F.col(lon_col), F.col(lat_col), F.when(is_py, F.col("_cf"))),
-        ).withColumn(
-            "feature_id",
-            F.when(~is_py, jvm_feature).otherwise(
-                F.when(F.col("_fid_raw") >= 0, F.col("_fid_raw"))
-            ),
-        )
+    joined = joined.withColumn(
+        "_fid_raw",
+        winner(F.col(lon_col), F.col(lat_col), F.when(is_py, F.col("_cf"))),
+    ).withColumn(
+        "feature_id",
+        F.when(~is_py, jvm_feature).otherwise(
+            F.when(F.col("_fid_raw") >= 0, F.col("_fid_raw"))
+        ),
+    )
     joined = joined.drop("fids", "r1", "r2", "_cf", "_cc", "_fid_raw")
 
     value_map = F.create_map(
         *[x for fid, poly in enumerate(polygons) for x in (F.lit(fid), F.lit(str(poly.value)))]
     )
     joined = joined.withColumn("zone_value", value_map[F.col("feature_id")])
-    if how == "inner":
-        joined = joined.filter(F.col("feature_id").isNotNull())
-    return joined
+    return joined.filter(F.col("feature_id").isNotNull())

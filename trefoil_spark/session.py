@@ -92,3 +92,18 @@ def local_frame(spark: SparkSession, rows, schema: str):
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, struct)
+
+
+def session_memo(spark: SparkSession, key, build):
+    """``build()``, computed once per session object and ``key``.
+
+    The memo is held on the ``spark`` object itself. A second session
+    (``spark.newSession()``) gets its own values, built under its own
+    conf, and two keys never evict each other. An entry is freed when its
+    session object is; nothing is dropped while the session lives, so no
+    persisted handle is lost while still in use.
+    """
+    memo = vars(spark).setdefault("_trefoil_memo", {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..grid import cells
+from ..session import session_memo
 
 # region extents (non-hot)
 LON0, LON_SPAN = -125.0, 12.0
@@ -124,9 +125,6 @@ def build_pages_scaled(
     return spark.sql(pages_cte_sql("_trefoil_documents_scaled", res))
 
 
-_PAGES_PLAN_CACHE: dict = {}
-
-
 def build_pages(
     spark: SparkSession, sf_dir: str, res: int = DEFAULT_RES, with_html: bool = True
 ) -> DataFrame:
@@ -139,23 +137,21 @@ def build_pages(
     itself caches file listings and catalog relations per session the
     same way); every action still computes from the parquet files.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, res, with_html)
-    cached = _PAGES_PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.createOrReplaceTempView("_trefoil_documents")
-    df = spark.sql(pages_cte_sql("_trefoil_documents", res))
-    df = df.withColumn("warc_ts", F.timestamp_seconds(F.col("warc_epoch")))
-    if with_html:
-        # html embeds the text — byte-identity of text implies html identity
-        df = df.withColumn(
-            "html",
-            F.encode(
-                F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")),
-                "UTF-8",
-            ),
-        )
-    _PAGES_PLAN_CACHE.clear()  # drop dead-session plans; keep the live one
-    _PAGES_PLAN_CACHE[key] = df
-    return df
+
+    def build():
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs.createOrReplaceTempView("_trefoil_documents")
+        df = spark.sql(pages_cte_sql("_trefoil_documents", res))
+        df = df.withColumn("warc_ts", F.timestamp_seconds(F.col("warc_epoch")))
+        if with_html:
+            # html embeds the text — byte-identity of text implies html identity
+            df = df.withColumn(
+                "html",
+                F.encode(
+                    F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")),
+                    "UTF-8",
+                ),
+            )
+        return df
+
+    return session_memo(spark, ("pages", sf_dir, res, with_html), build)
